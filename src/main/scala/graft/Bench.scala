@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -272,32 +270,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      // plan-text truncation OFF for fingerprint determinism (r12): the
-      // FileScan metadata cutoff ("DataFilters: [..., ...]") lands at a
-      // RAW-text char budget, so exprId digit width — a function of how
-      // many plans the session built earlier — shifts the cut point and
-      // flips the fingerprint of any query with truncated metadata when
-      // a gate is added/changed anywhere EARLIER in the run (diffed to
-      // the char 2026-08-15: dedup_ngram's fp flapped solo vs in-suite
-      // on a ' ...' vs ',...' tail). Untruncated text + the exprId/
-      // lambda normalizations make fingerprints run-order-FREE, not
-      // merely stable under a fixed order. One-time fp epoch bump for
-      // queries whose metadata used to truncate (SCALE.md r12 note).
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session(Graft.cpus)
+    // plan-text truncation OFF for fingerprint determinism (r12): the
+    // FileScan metadata cutoff ("DataFilters: [..., ...]") lands at a
+    // RAW-text char budget, so exprId digit width — a function of how
+    // many plans the session built earlier — shifts the cut point and
+    // flips the fingerprint of any query with truncated metadata when
+    // a gate is added/changed anywhere EARLIER in the run (diffed to
+    // the char 2026-08-15: dedup_ngram's fp flapped solo vs in-suite
+    // on a ' ...' vs ',...' tail). Untruncated text + the exprId/
+    // lambda normalizations make fingerprints run-order-FREE, not
+    // merely stable under a fixed order. One-time fp epoch bump for
+    // queries whose metadata used to truncate (SCALE.md r12 note).
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
 
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(list) => list.split(",").toSeq // local iteration filter

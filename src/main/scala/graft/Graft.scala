@@ -211,19 +211,28 @@ object Graft {
     g
   }
 
-  /** Self-contained local session at the engine's standard operating
-    * point (AQE on, 32 shuffle partitions, UTC, ns-parquet handling).
+  /** The engine's one session factory: a local session at the standard
+    * operating point (AQE on, 32 shuffle partitions, UTC, ns-parquet
+    * handling, warehouse under the JVM tmpdir). Bench, Verify,
+    * ScaleRehearsal, Probe and [[local]] all take their session from
+    * here, so the configuration the oracle verifies is the one the
+    * benchmarks time.
+    *
     * If a SparkSession already exists in this JVM, getOrCreate returns
-    * IT and the builder configs (master/cpus included) are ignored — so
-    * the session-level settings the engine depends on are re-applied
-    * explicitly below, and they take effect either way; only the
-    * master/cpus request is best-effort on a pre-existing session. */
-  def local(dataDir: String = "/root/testdata/sf0.001",
-      cpus: Int = Runtime.getRuntime.availableProcessors()): Graft = {
+    * IT and the builder configs (master/cpus and the static warehouse
+    * dir included) are ignored — so the session-level settings the
+    * engine depends on are re-applied explicitly below, and they take
+    * effect either way; only the builder settings are best-effort on a
+    * pre-existing session. */
+  def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.ui.enabled", "false")
+      // bucketed-table queries (q38) saveAsTable into the warehouse;
+      // pin it to tmp so a run never depends on CWD writability
+      .config("spark.sql.warehouse.dir",
+        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
       .getOrCreate()
     // runtime-settable session confs: applied even when getOrCreate
     // returned someone else's session
@@ -232,6 +241,32 @@ object Graft {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.sparkContext.setLogLevel("WARN")
-    apply(spark, dataDir)
+    spark
   }
+
+  /** [[session]] with the fixture tables under `dataDir` registered —
+    * the self-contained entry for a user or a benchmark. */
+  def local(dataDir: String = "/root/testdata/sf0.001",
+      cpus: Int = Runtime.getRuntime.availableProcessors()): Graft =
+    apply(session(cpus), dataDir)
+
+  /** Cores for the harness mains: `SPARK_GRAFT_CPUS`, default every
+    * core of this machine (the [[local]] default). Read on each call so
+    * a bad value fails the caller with a named cause. */
+  def cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusFrom(raw: Option[String]): Int =
+    positiveSetting("SPARK_GRAFT_CPUS", raw,
+      Runtime.getRuntime.availableProcessors())
+
+  /** An optional positive-integer setting: `default` when absent, else
+    * the value — or an IllegalArgumentException naming `name` when it is
+    * malformed or not positive. */
+  private[graft] def positiveSetting(name: String, raw: Option[String],
+      default: => Int): Int =
+    raw.fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
 }

@@ -86,13 +86,11 @@ object Tables {
   private def load(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Byte threshold under which [[fanOutSmall]] fans a scan out
-    * (SPARK_GRAFT_SMALL_SCAN_MB, default 256 MB). Any table above it
-    * already yields at least a few natural splits and real corpora are
-    * orders of magnitude past it — the fan-out is a SMALL-INPUT floor,
-    * never a production reshuffle. */
-  private def smallScanBytes: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_SCAN_MB", "256").toLong << 20
+  /** Byte threshold under which [[fanOutSmall]] fans a scan out. Any
+    * table above it already yields at least a few natural splits and
+    * real corpora are orders of magnitude past it — the fan-out is a
+    * SMALL-INPUT floor, never a production reshuffle. */
+  private val SmallScanBytes: Long = 256L << 20
 
   /** Scale-adaptive scan fan-out for CPU-DENSE per-row kernels (r16,
     * guide §2/§6: derive partitioning from input size, never a
@@ -101,15 +99,14 @@ object Tables {
     * md5, token explode, codec decode) in ONE scan task — measured on
     * dedup_ngram at sf0.1: 2.8 s of a 6.2 s wall in the single scan
     * task while 31 cores idled. When the table's file length (metadata
-    * only — no job) is under [[smallScanBytes]], the scan is fanned out
+    * only — no job) is under [[SmallScanBytes]], the scan is fanned out
     * by an EXPLICIT hash repartition on `key` (unique id ⇒ no skew; a
     * keyed exchange skips round-robin's sortBeforeRepartition pass and
     * AQE leaves explicit repartitions uncoalesced). Above the
     * threshold the frame is returned untouched: at production scale
     * the scan already carries ≥ cores-many splits and the added
-    * exchange would be pure cost. 2× cores (override:
-    * SPARK_GRAFT_FANOUT, absolute partition count) keeps the tail
-    * balanced when per-doc cost varies. */
+    * exchange would be pure cost. 2× cores keeps the tail balanced
+    * when per-doc cost varies. */
   private[graft] def fanOutSmall(s: SparkSession, dir: String, name: String,
       keys: Seq[String], df: DataFrame): DataFrame = {
     val bytes =
@@ -118,16 +115,9 @@ object Tables {
         p.getFileSystem(s.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
       } catch { case _: Throwable => Long.MaxValue } // unknown ⇒ untouched
-    if (bytes < smallScanBytes) {
-      // the override is validated like smallScanBytes' unknown-size
-      // handling (r17, ADVICE): a malformed or non-positive value falls
-      // back to the default instead of throwing inside a table loader
-      val n = sys.env.get("SPARK_GRAFT_FANOUT")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .filter(_ >= 1)
-        .getOrElse(2 * s.sparkContext.defaultParallelism)
-      df.repartition(n, keys.map(col): _*)
-    } else df
+    if (bytes < SmallScanBytes)
+      df.repartition(2 * s.sparkContext.defaultParallelism, keys.map(col): _*)
+    else df
   }
 
   /** [[documents]] with the small-scan fan-out — the entry for

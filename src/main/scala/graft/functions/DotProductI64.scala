@@ -127,9 +127,12 @@ object DotProductI64 {
 
   /** Idempotent per-session registration (works on driver-built
     * sessions that didn't pass `.withExtensions`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_i64", exprs => DotProductI64(exprs(0), exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("dot_i64")))
+      registry.createOrReplaceTempFunction(
+        "dot_i64", exprs => DotProductI64(exprs(0), exprs(1)), "scala_udf")
+  }
 }
 
 /** Build-time registration for users constructing their own session:

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -185,8 +186,10 @@ object IntersectSizeSorted {
 
   /** Idempotent per-session registration (works on driver-built
     * sessions that didn't pass `.withExtensions`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_size_sorted",
-      exprs => IntersectSizeSorted(exprs(0), exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("intersect_size_sorted")))
+      registry.createOrReplaceTempFunction("intersect_size_sorted",
+        exprs => IntersectSizeSorted(exprs(0), exprs(1)), "scala_udf")
+  }
 }

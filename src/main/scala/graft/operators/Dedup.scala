@@ -660,12 +660,18 @@ object Dedup {
     * truth join's Σ df² became ~26 × (250k)² intermediate rows and
     * died of disk (ENOSPC), which is not a defect but the documented
     * sample² budget being exceeded by a sample that should have been
-    * held fixed-size. The env knob is read once at class init and
+    * held fixed-size. The env knob is read once, on first use, and
     * interpolated into the DuckDB twin too, so the operator and its
     * oracle always sample identically; the gate harnesses never set
     * it, so gate outputs/hashes are untouched. */
-  val RecallSampleMod: Int =
-    sys.env.get("SPARK_GRAFT_RECALL_MOD").map(_.toInt).getOrElse(2)
+  lazy val RecallSampleMod: Int =
+    recallSampleModFrom(sys.env.get("SPARK_GRAFT_RECALL_MOD"))
+
+  /** `SPARK_GRAFT_RECALL_MOD`: default 2, else a positive integer — a
+    * malformed or non-positive value fails with the variable named
+    * instead of as a `doc_id % 0` division at run time. */
+  private[graft] def recallSampleModFrom(raw: Option[String]): Int =
+    graft.Graft.positiveSetting("SPARK_GRAFT_RECALL_MOD", raw, 2)
 
   /** Recall evaluation of the MinHash-LSH index — [[Similarity]]'s
     * `sim_recall_eval` discipline applied to the dedup family: ground
@@ -811,13 +817,9 @@ object Dedup {
 
   /** Propagation hops folded into ONE checkpointed round of
     * [[propagateMin]] (r17, guide §2: cut job count, not task time).
-    * Validated like the other env knobs: non-positive or malformed
-    * values fall back to the default of 2. The fixpoint is hop-count-
-    * invariant, so any value computes identical results. */
-  private def ccHopsPerRound: Int =
-    sys.env.get("SPARK_GRAFT_CC_HOPS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(2)
+    * The fixpoint is hop-count-invariant, so any value computes
+    * identical results. */
+  private val CcHopsPerRound = 2
 
   /** Near-duplicate clustering: connected components over the LSH
     * near-dup pair graph (est_j ≥ [[CcThreshold]]) — the transitive-
@@ -921,13 +923,11 @@ object Dedup {
             least(col("label"), coalesce(col("nbr"), col("label"))).as("label"),
             (col("nbr") < col("label")).as("improved"))
       }
-      // SPARK_GRAFT_CC_HOPS (default 2) parameterizes the hops-per-
-      // round trade: 2 halves the per-round barrier count (right where
-      // scheduling dominates), 1 restores the single-join round (the
-      // A/B control, and the choice if a deployment's rounds are
-      // compute-bound enough that the duplicated hop-1 join costs more
-      // than the saved barrier).
-      val hopped = (1 until ccHopsPerRound).foldLeft(hop(labels)) {
+      // two hops per round halve the per-round barrier count, right
+      // where scheduling dominates; one hop would pay off only if the
+      // rounds were compute-bound enough that the duplicated hop-1 join
+      // cost more than the saved barrier (OPTIMIZATION_r17.md W4/W7).
+      val hopped = (1 until CcHopsPerRound).foldLeft(hop(labels)) {
         case (cur, _) => hop(cur.select(col("doc_id"), col("label")))
       }
       val next = graft.Graft.compactCheckpoint(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
 
@@ -91,25 +91,10 @@ object ScaleRehearsal {
     val src = "/root/testdata/sf0.1"
     val out = args.headOption.getOrElse("/tmp/graft_sf1")
     val copies = if (args.length > 1) args(1).toInt else 10
-    // r17: honor SPARK_GRAFT_CPUS like Bench so the 100× legs can
-    // record an 8-vs-32-core scaling comparison (the sf0.1 bench is
-    // choreography-bound — every c8/c32 ratio ≈1 — so parallel-scaling
-    // evidence must come from these legs)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bucketed-table gates (q38) saveAsTable into the warehouse; pin
-      // it to tmp so the full-registry sweep never depends on CWD
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-rehearsal-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_CPUS sets the cores, so the 100× legs can record a
+    // core-scaling comparison (the sf0.1 bench is choreography-bound,
+    // so parallel-scaling evidence must come from these legs)
+    val spark = graft.Graft.session(graft.Graft.cpus)
 
     val mode = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_MODE", "replica")
     require(Set("replica", "distinct", "dimscale", "boilerplate", "mixed")(mode),

@@ -702,4 +702,13 @@ class DedupSpec extends AnyFunSuite {
       }.sorted
     assert(got == want, s"got $got want $want")
   }
+
+  test("SPARK_GRAFT_RECALL_MOD: default 2; malformed or non-positive values name the variable") {
+    assert(Dedup.recallSampleModFrom(None) == 2)
+    assert(Dedup.recallSampleModFrom(Some("100")) == 100)
+    for (bad <- Seq("x", "", "0", "-1")) {
+      val e = intercept[IllegalArgumentException](Dedup.recallSampleModFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_RECALL_MOD"), e.getMessage)
+    }
+  }
 }

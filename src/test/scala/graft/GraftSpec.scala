@@ -75,4 +75,14 @@ class GraftSpec extends AnyFunSuite {
     assert(g.runVs("ta_lm_score_vs", incoming, snapshot).count() == incoming.count())
     assert(g.runVs("ta_decontaminate_vs", incoming, snapshot).count() == incoming.count())
   }
+
+  test("SPARK_GRAFT_CPUS: default all cores; malformed or non-positive values name the variable") {
+    assert(Graft.cpusFrom(None) == Runtime.getRuntime.availableProcessors())
+    assert(Graft.cpusFrom(Some("4")) == 4)
+    assert(Graft.cpusFrom(Some(" 8 ")) == 8)
+    for (bad <- Seq("abc", "", "4.5", "0", "-2")) {
+      val e = intercept[IllegalArgumentException](Graft.cpusFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
 }
